@@ -15,6 +15,15 @@ same locality through directory partitioning + in-file ordering:
   so per-device slices are contiguous (parquet row-group statistics
   then prune within the file the way Cassandra clustering keys do).
 
+A device read is the single-partition lookup of the reference
+(``queries.ex:28-58,678-716``): the driver computes the device's
+bucket (``bucket_of``, bit-identical to ``device_bucket``) and lists
+only the one ``realm=<realm>/bucket=<b>`` directory, reading it with
+the table's declared schema (``DEVICE_TABLE_SCHEMAS``), so a point read
+is one Spark job whose cost does not grow with table size: no listing
+of the other buckets, no schema-inference job. Tables without a
+declaration infer their schema from that one bucket directory.
+
 Writes are append-only; the two non-append semantics of the reference
 are expressed as idempotent compaction jobs over the log:
 
@@ -33,8 +42,13 @@ semantics.
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..types import TYPED_COLUMNS
 
 #: Directory-partition fan-out for device-keyed tables. 64 buckets x
 #: realms keeps listings cheap; at 100 TB each bucket holds ~1.5 TB
@@ -46,6 +60,116 @@ def device_bucket(device_id: Column, n_buckets: int = N_BUCKETS) -> Column:
     """Stable device -> bucket assignment (the consistent-hash queue
     routing of amqp_data_consumer/supervisor.ex:41-49, made a column)."""
     return F.pmod(F.xxhash64(device_id), F.lit(n_buckets)).cast("int")
+
+
+#: XXH64's word mask and primes
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
+
+
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as a signed 64-bit integer: the value Spark's
+    ``xxhash64`` (seed 42) gives for a string column holding ``data``
+    as UTF-8."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed & _M64, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_round(a, lane) for a, lane in zip(v, struct.unpack_from("<4Q", data, i))]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= (struct.unpack_from("<I", data, i)[0] * _P1) & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= (b * _P5) & _M64
+        h = (_rotl(h, 11) * _P1) & _M64
+    h = ((h ^ (h >> 33)) * _P2) & _M64
+    h = ((h ^ (h >> 29)) * _P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def bucket_of(device_id: str, n_buckets: int = N_BUCKETS) -> int:
+    """``device_bucket`` computed on the driver, for one device id."""
+    return xxhash64(device_id.encode("utf-8")) % n_buckets
+
+
+#: Characters Spark escapes as ``%XX`` in partition directory names
+#: (``ExternalCatalogUtils.escapePathName``).
+_PATH_ESCAPED = frozenset([chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^"))
+
+
+def escape_partition_value(value: str) -> str:
+    """A partition value as Spark spells it in a directory name."""
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in value)
+
+
+_PARTITION_FIELDS = [
+    T.StructField("realm", T.StringType()),
+    T.StructField("bucket", T.IntegerType()),
+]
+_DATASTREAM_SCHEMA = T.StructType(
+    [
+        T.StructField("device_id", T.StringType()),
+        T.StructField("interface_id", T.StringType()),
+        T.StructField("interface", T.StringType()),
+        T.StructField("endpoint_id", T.StringType()),
+        T.StructField("path", T.StringType()),
+        T.StructField("value_timestamp", T.TimestampType()),
+        T.StructField("reception_timestamp", T.TimestampType()),
+        T.StructField("expires_at", T.TimestampType()),
+        *[T.StructField(c, t) for c, t in TYPED_COLUMNS],
+        *_PARTITION_FIELDS,
+    ]
+)
+_PROPERTY_FIELDS = [
+    T.StructField("device_id", T.StringType()),
+    T.StructField("interface", T.StringType()),
+    T.StructField("path", T.StringType()),
+    T.StructField("reception_timestamp", T.TimestampType()),
+    T.StructField("typed_json", T.StringType()),
+]
+
+#: On-disk schemas of the engine's own device tables, keyed by table
+#: directory name: the file columns in file order, then the partition
+#: columns, which is the column order a read returns.
+DEVICE_TABLE_SCHEMAS: dict[str, T.StructType] = {
+    "individual_datastreams": _DATASTREAM_SCHEMA,
+    "individual_datastreams_vacuumed": _DATASTREAM_SCHEMA,
+    "property_log": T.StructType(
+        [*_PROPERTY_FIELDS, T.StructField("is_delete", T.BooleanType()), *_PARTITION_FIELDS]
+    ),
+    "individual_properties": T.StructType([*_PROPERTY_FIELDS, *_PARTITION_FIELDS]),
+}
+
+
+def select_declared(df: DataFrame, table: str) -> DataFrame:
+    """``df`` cut to the declared columns of ``table``, the form its
+    writers hand to ``write_device_table`` (which derives ``bucket``)."""
+    return df.select(*[f.name for f in DEVICE_TABLE_SCHEMAS[table] if f.name != "bucket"])
 
 
 def write_device_table(
@@ -80,18 +204,40 @@ def read_device_table(
     device_id: str | None = None,
     n_buckets: int = N_BUCKETS,
 ) -> DataFrame:
-    """Read with partition pruning: realm and device filters hit the
-    directory level (bucket is derived from device_id, so a point read
-    scans a single (realm, bucket) directory)."""
-    df = spark.read.parquet(path)
-    if realm is not None:
-        df = df.filter(F.col("realm") == realm)
-    if device_id is not None:
-        df = df.filter(
-            (F.col("bucket") == device_bucket(F.lit(device_id), n_buckets))
-            & (F.col("device_id") == device_id)
-        )
-    return df
+    """Read a device table; ``realm`` and ``device_id`` narrow it.
+
+    A device read lists one directory: the driver computes the
+    device's bucket and reads ``path/realm=<realm>/bucket=<b>``
+    (``realm=*`` without a realm) with ``basePath=path``, so ``realm``
+    and ``bucket`` still come back as columns. Tables named in
+    ``DEVICE_TABLE_SCHEMAS`` are read with their declared schema, any
+    other table infers its schema from that one directory: a point
+    read of a declared table is a single Spark job whose cost does not
+    grow with table size. A device whose bucket directory does not
+    exist gets an empty frame with the table's columns; a missing
+    table raises ``PATH_NOT_FOUND`` as a plain read does.
+    """
+    schema = DEVICE_TABLE_SCHEMAS.get(path.rstrip("/").rsplit("/", 1)[-1])
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if device_id is None:
+        df = reader.parquet(path)
+        return df if realm is None else df.filter(F.col("realm") == realm)
+    realm_dir = "*" if realm is None else escape_partition_value(realm)
+    bucket_dir = f"{path}/realm={realm_dir}/bucket={bucket_of(device_id, n_buckets)}"
+    if _exists(spark, bucket_dir):
+        df = reader.option("basePath", path).parquet(bucket_dir)
+    else:
+        # no rows for this device: the table's columns, without a scan
+        df = reader.parquet(path).limit(0)
+    return df.filter(F.col("device_id") == device_id)
+
+
+def _exists(spark: SparkSession, pattern: str) -> bool:
+    """Whether the Hadoop glob ``pattern`` matches anything."""
+    jvm = spark.sparkContext._jvm
+    glob = jvm.org.apache.hadoop.fs.Path(pattern)
+    fs = glob.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return bool(fs.globStatus(glob))
 
 
 PROPERTY_KEY = ("realm", "device_id", "interface", "path")

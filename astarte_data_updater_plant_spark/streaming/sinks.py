@@ -31,7 +31,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..storage.layout import write_device_table
+from ..storage.layout import select_declared, write_device_table
 from .pipeline import (
     PROPERTY_JSON_SCHEMA,
     commands_table,
@@ -95,9 +95,9 @@ def write_outputs_batch(outputs: DataFrame, base_dir: str) -> None:
     downstream LWW/dedup semantics already tolerate."""
     outputs = outputs.cache()
     try:
-        ds = datastream_table(outputs)
+        ds = select_declared(datastream_table(outputs), "individual_datastreams")
         with_retry(lambda: write_device_table(ds, f"{base_dir}/individual_datastreams"))
-        plog = property_log_table(outputs)
+        plog = select_declared(property_log_table(outputs), "property_log")
         with_retry(
             lambda: write_device_table(
                 plog,
